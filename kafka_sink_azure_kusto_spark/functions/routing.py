@@ -17,7 +17,7 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -98,3 +98,19 @@ def with_route(
         )
     )
     return out
+
+
+def route_index(
+    mappings: Sequence[TopicToTableMapping], topic_col: str = "topic"
+) -> Column:
+    """F3 as one CASE on the topic: the index in ``mappings`` of the
+    record's route — exact topics first, then the ``*`` wildcard, else
+    null (an unmapped topic with no wildcard routes nowhere)."""
+    wildcard = next((i for i, m in enumerate(mappings) if m.is_wildcard), None)
+    expr = None
+    for i, m in enumerate(mappings):
+        if not m.is_wildcard:
+            hit = F.col(topic_col) == F.lit(m.topic)
+            expr = F.when(hit, F.lit(i)) if expr is None else expr.when(hit, F.lit(i))
+    fallback = F.lit(wildcard).cast("int")
+    return fallback if expr is None else expr.otherwise(fallback)

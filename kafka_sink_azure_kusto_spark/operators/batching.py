@@ -17,13 +17,15 @@ the micro-batch trigger interval IS the flush interval.
 
 from __future__ import annotations
 
+from typing import Union
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def with_file_assignment(
     df: DataFrame,
-    flush_size_bytes: int,
+    flush_size_bytes: Union[int, Column],
     size_col: str = "serialized_size",
     topic_col: str = "topic",
     partition_col: str = "partition",
@@ -38,6 +40,9 @@ def with_file_assignment(
       runs *after* the write, so a file always holds ≥1 record and may
       overshoot by one record, exactly like the reference).
     - ``file_offset``  — first offset in the file (B4 naming input).
+
+    ``flush_size_bytes`` may be a Column, constant within each
+    (topic, partition), giving each record its own route's threshold.
 
     The roll rule in the reference is "roll after the record that crossed
     the threshold", which makes file boundaries a pure prefix-sum
@@ -62,7 +67,10 @@ def with_file_assignment(
     # ≤ threshold + one record and never produce empty files; the bucket
     # form is a single window aggregation with no sequential dependency,
     # which is what survives a 1000-executor scale-up.
-    df = df.withColumn("file_seq", (prev_cum / F.lit(flush_size_bytes)).cast("bigint"))
+    threshold = (
+        flush_size_bytes if isinstance(flush_size_bytes, Column) else F.lit(flush_size_bytes)
+    )
+    df = df.withColumn("file_seq", (prev_cum / threshold).cast("bigint"))
     w_file = Window.partitionBy(topic_col, partition_col, "file_seq")
     return df.withColumn("file_offset", F.min(offset_col).over(w_file))
 

@@ -186,13 +186,14 @@ class FileDlqProducer:
 
 
 def executor_partition_sender(
-    topic: str,
     producer_props: dict,
     producer_factory: Optional[Callable[[dict], object]] = None,
     counter=None,
 ):
     """Executor-side DLQ production: returns a picklable per-partition
-    callable for ``DataFrame.foreachPartition`` over (key, value) rows.
+    callable for ``DataFrame.foreachPartition`` over (topic, key, value)
+    rows — each row names its own DLQ topic, so one pass serves every
+    mapping's failed records.
 
     Each task builds ONE producer for its partition, streams its rows,
     flushes, and closes — so DLQ throughput scales with the cluster and
@@ -215,7 +216,7 @@ def executor_partition_sender(
             for r in rows:
                 if producer is None:  # lazy: empty partitions build nothing
                     producer = factory(producer_props)
-                producer.send(topic, key=_to_bytes(r["key"]), value=_to_bytes(r["value"]))
+                producer.send(r["topic"], key=_to_bytes(r["key"]), value=_to_bytes(r["value"]))
                 n += 1
             if producer is not None:
                 producer.flush()

@@ -9,52 +9,55 @@ guarantee as the reference's lastCommittedOffset scheme with replay
 granularity of a micro-batch instead of a file (SURVEY §7.4).
 
 Scale notes:
-- Encoding is JVM-side (``to_json``/``concat_ws``; whole-stage codegen).
-- File staging runs on executors via ``applyInPandas`` grouped by
-  (topic, partition, file_seq): each Kafka partition's records land in
-  rolled files exactly like one TopicPartitionWriter, groups are bounded
-  by flush_size_bytes so no group can OOM an executor, and the only
-  shuffle is keyed on the natural (topic, partition) parallelism unit.
+- One routed pass per micro-batch, like the reference's per-record
+  route lookup (KustoSinkTask.java:334-340): each record is tagged with
+  its mapping by one CASE on ``topic``, encoded by a CASE on that tag,
+  assigned to rolled files once, and every mapping's files are staged
+  in ONE Spark job. Encoding is JVM-side (``to_json``/``concat_ws``;
+  whole-stage codegen).
+- File staging runs on executors as a per-partition Arrow writer
+  (``streaming/staging.py``, ``mapInArrow``): the file-assignment
+  window's exchange is keyed on (topic, partition), the natural Kafka
+  parallelism unit, so each Kafka partition's records land in rolled
+  files exactly like one TopicPartitionWriter, and the writer holds one
+  file's rows (≤ flush_size_bytes plus one record) at a time.
 - Only the tiny per-file manifest is collected to the driver; record
   data never is (DLQ records — failed files only — are the bounded
   exception).
-- Ingestion of a batch's staged files runs on a bounded thread pool
-  (``config.ingest_threads``): ingest RPCs are I/O-bound HTTP, so one
-  slow file no longer serializes the whole batch behind its retry loop.
+- Ingestion of a batch's staged files runs on one bounded thread pool
+  (``config.ingest_threads``), each file with its own mapping's
+  ingestion properties: ingest RPCs are I/O-bound HTTP, so one slow
+  file no longer serializes the whole batch behind its retry loop.
 
 Staging-directory requirement (multi-node clusters): in the default
-driver-ingest mode, files are WRITTEN by executors (``applyInPandas``)
-and READ/deleted by the driver-side ingest loop, so
-``config.staging_dir`` MUST be shared storage (NFS / DBFS /
-fuse-mounted object store) on a real cluster; executor-local paths only
-work in local mode. A non-shared path surfaces as ``FileNotFoundError``
-at ingest time, which ``classify_ingest_error`` treats as PERMANENT (no
-retry-budget burn) precisely to make this misconfiguration fail fast.
+driver-ingest mode, files are WRITTEN by executors and READ/deleted by
+the driver-side ingest loop, so ``config.staging_dir`` MUST be shared
+storage (NFS / DBFS / fuse-mounted object store) on a real cluster;
+executor-local paths only work in local mode. A non-shared path
+surfaces as ``FileNotFoundError`` at ingest time, which
+``classify_ingest_error`` treats as PERMANENT (no retry-budget burn)
+precisely to make this misconfiguration fail fast.
 
-``executor_side_ingest=True`` removes that requirement entirely — each
-staging group ingests its own rolled file on the executor that wrote it
-(retry + permanent classification included), the file never leaves
-local disk, and ingest parallelism equals staging parallelism. This is
-the 1000-executor mode; the driver only aggregates the per-file outcome
-manifest (metrics, behavior.on.error, DLQ).
+``executor_side_ingest=True`` removes that requirement entirely — the
+writer ingests each rolled file on the executor that wrote it (retry +
+permanent classification included), the file never leaves local disk,
+and ingest parallelism equals staging parallelism. This is the
+1000-executor mode; the driver only settles the per-file outcome
+manifest (metrics, behavior.on.error, DLQ) on the same path as driver
+mode.
 """
 
 from __future__ import annotations
 
 import logging
 import os
-from dataclasses import dataclass
-from typing import Iterable, Optional
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import replace
+from typing import Optional
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import BinaryType, StructType
 
 from kafka_sink_azure_kusto_spark.config import (
     BehaviorOnError,
@@ -63,201 +66,45 @@ from kafka_sink_azure_kusto_spark.config import (
 )
 from kafka_sink_azure_kusto_spark.functions.encoders import encode_for_format
 from kafka_sink_azure_kusto_spark.functions.filters import drop_tombstones
+from kafka_sink_azure_kusto_spark.functions.routing import route_index
 from kafka_sink_azure_kusto_spark.operators.batching import with_file_assignment
 from kafka_sink_azure_kusto_spark.streaming.backends import (
     IngestBackend,
     IngestionProperties,
 )
 from kafka_sink_azure_kusto_spark.streaming.metrics import SinkMetrics
-from kafka_sink_azure_kusto_spark.streaming.retry import retry_with_backoff
+from kafka_sink_azure_kusto_spark.streaming.staging import (
+    MANIFEST_SCHEMA,
+    Route,
+    StagedFile,
+    file_writer,
+    ingest_with_retry,
+    outcome,
+)
 
 log = logging.getLogger(__name__)
 
-_MANIFEST_SCHEMA = StructType(
-    [
-        StructField("path", StringType(), False),
-        StructField("topic", StringType(), False),
-        StructField("partition", LongType(), False),
-        StructField("file_offset", LongType(), False),
-        StructField("records", LongType(), False),
-        StructField("raw_bytes", LongType(), False),
-        # Executor-side-ingest outcome (driver-mode rows carry "Staged").
-        StructField("status", StringType(), False),
-        StructField("error", StringType(), False),
-        StructField("attempts", LongType(), False),
-    ]
-)
+
+def _by_route(values: list[tuple[Column, list[int]]]) -> Column:
+    """One CASE on the ``route`` tag choosing each route's expression
+    (``values`` pairs an expression with the routes that use it; the
+    last pair is the ELSE branch)."""
+    *cases, (default, _) = values
+    if not cases:
+        return default
+    hits = [(F.col("route").isin(routes), value) for value, routes in cases]
+    expr = F.when(*hits[0])
+    for hit, value in hits[1:]:
+        expr = expr.when(hit, value)
+    return expr.otherwise(default)
 
 
-@dataclass(frozen=True)
-class StagedFile:
-    path: str
-    topic: str
-    partition: int
-    file_offset: int
-    records: int
-    raw_bytes: int
-    status: str = "Staged"
-    error: str = ""
-    attempts: int = 0
-
-
-# Per-Python-worker backend cache for executor-side ingest: one client
-# per (worker process, cache token) instead of one per rolled file —
-# applyInPandas reuses worker processes across groups and batches.
-_EXECUTOR_BACKENDS: dict = {}
-
-
-def _cached_backend(token: str, factory):
-    b = _EXECUTOR_BACKENDS.get(token)
-    if b is None:
-        if len(_EXECUTOR_BACKENDS) >= 16:
-            # Long-lived workers serving many sink instances: bound the
-            # cache (stale clients from finished sinks hold connections).
-            _EXECUTOR_BACKENDS.clear()
-        b = factory()
-        _EXECUTOR_BACKENDS[token] = b
-    return b
-
-
-def _stage_writer(
-    out_dir: str,
-    fmt: str,
-    binary_mode: bool = False,
-    avro_schema: Optional[dict] = None,
-    arrow_schema=None,
-    ingest: Optional[dict] = None,
-):
-    """Build the applyInPandas group writer: one rolled gzipped file per
-    (topic, partition, file_seq) group, named per B4
-    (TopicPartitionWriter.java:235-242), owner-only perms like
-    FileWriter.openFile (FileWriter.java:93-154).
-
-    ``binary_mode`` is the E4 bytes passthrough: payloads are written
-    verbatim with no newline separator (Avro bytes = one complete
-    container file per message, ByteRecordWriterProvider.java:21-39).
-
-    ``avro_schema`` switches on E2 struct→Avro: the group's ``value``
-    structs are serialized into ONE Avro Object Container File per rolled
-    file (pure-Python writer, functions/avro_io.py — the DataFileWriter
-    path of AvroRecordWriterProvider.java:27-73), then gzipped like every
-    other staged format (FileWriter.java:151).
-
-    ``arrow_schema`` switches on struct→parquet (extension beyond the
-    reference's writer set; Kusto ingests parquet natively): one parquet
-    file per rolled file via pyarrow, typed by the Spark struct schema.
-
-    ``ingest`` (executor-side-ingest mode) carries ``{"factory", "token",
-    "props", "max_attempts", "backoff_ms"}``: the group ingests its OWN
-    rolled file right after writing it — write and ingest co-located on
-    the executor, so ``staging_dir`` needs no shared filesystem and
-    ingest parallelism equals staging parallelism. The manifest row
-    reports the per-file outcome instead of raising, so one poisoned
-    group can't kill the Spark stage before its siblings finish."""
-    import gzip
-
-    # Parquet/ORC must NOT be externally gzipped: they are internally
-    # compressed columnar containers and Kusto rejects a .gz wrapper
-    # around them (deliberate deviation from the reference's
-    # gzip-everything COMPRESSION_EXTENSION — the reference never stages
-    # these formats). Text formats and Avro keep the reference's .gz.
-    compress = arrow_schema is None
-
-    def write_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("offset")
-        topic = str(pdf["topic"].iloc[0])
-        partition = int(pdf["partition"].iloc[0])
-        file_offset = int(pdf["file_offset"].iloc[0])
-        ext = f".{fmt}.gz" if compress else f".{fmt}"
-        name = f"kafka_{topic}_{partition}_{file_offset}{ext}"
-        os.makedirs(out_dir, exist_ok=True)
-        path = os.path.join(out_dir, name)
-        if avro_schema is not None:
-            from kafka_sink_azure_kusto_spark.functions.avro_io import write_container
-
-            bio = __import__("io").BytesIO()
-            write_container((dict(v) for v in pdf["value"]), avro_schema, bio)
-            body = bio.getvalue()
-        elif arrow_schema is not None:
-            import io as _io
-
-            import pyarrow as pa
-
-            table = pa.Table.from_pylist(
-                [dict(v) for v in pdf["value"]], schema=arrow_schema
-            )
-            bio = _io.BytesIO()
-            if fmt == "orc":
-                import pyarrow.orc as _orc
-
-                _orc.write_table(table, bio)
-            else:
-                import pyarrow.parquet as pq
-
-                pq.write_table(table, bio)
-            body = bio.getvalue()
-        elif binary_mode:
-            body = b"".join(bytes(b) for b in pdf["line"])
-        else:
-            body = ("\n".join(pdf["line"].astype(str)) + "\n").encode("utf-8")
-        with open(path, "wb") as raw:
-            os.fchmod(raw.fileno(), 0o600)
-            if compress:
-                with gzip.GzipFile(fileobj=raw, mode="wb", mtime=0) as gz:
-                    gz.write(body)
-            else:
-                raw.write(body)
-        status, error, attempts = "Staged", "", 0
-        if ingest is not None:
-            from kafka_sink_azure_kusto_spark.streaming.backends import (
-                classify_ingest_error,
-            )
-            from kafka_sink_azure_kusto_spark.streaming.retry import (
-                retry_with_backoff,
-            )
-
-            backend = _cached_backend(ingest["token"], ingest["factory"])
-            n_attempts = [0]
-
-            def attempt():
-                result = backend.ingest_file(path, ingest["props"])
-                if not result.accepted:
-                    raise RuntimeError(f"ingestion final status {result.status}")
-                return result
-
-            try:
-                retry_with_backoff(
-                    attempt,
-                    max_attempts=ingest["max_attempts"],
-                    backoff_ms=ingest["backoff_ms"],
-                    is_permanent=classify_ingest_error,
-                    on_attempt=lambda _: n_attempts.__setitem__(0, n_attempts[0] + 1),
-                )
-                status = "Succeeded"
-            except Exception as e:  # noqa: BLE001 — reported via manifest
-                status, error = "Failed", f"{type(e).__name__}: {e}"
-            attempts = n_attempts[0]
-            try:
-                os.remove(path)  # B5 — co-located cleanup, success or not
-            except OSError:
-                pass
-        return pd.DataFrame(
-            [
-                {
-                    "path": path,
-                    "topic": topic,
-                    "partition": partition,
-                    "file_offset": file_offset,
-                    "records": len(pdf),
-                    "raw_bytes": len(body),
-                    "status": status,
-                    "error": error,
-                    "attempts": attempts,
-                }
-            ]
-        )
-
-    return write_group
+def _grouped(pairs) -> list[tuple[Column, list[int]]]:
+    """[(key, expression)] per route → [(expression, routes)] per key."""
+    out: dict = {}
+    for i, (key, value) in enumerate(pairs):
+        out.setdefault(key, (value, []))[1].append(i)
+    return list(out.values())
 
 
 class _WarmupNullBackend:
@@ -356,152 +203,58 @@ class KustoSparkSink:
 
     # ------------------------------------------------------- the data plane
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """SURVEY §3.2 collapsed: kafkaDF → filter tombstones → per-mapping
-        (filter topic → encode → stage → ingest-with-retry → else DLQ)."""
-        df = drop_tombstones(batch_df)  # F1
-        exact_topics = self._mapped_topics()
-        for m in self.config.mappings:
-            if m.is_wildcard:
-                sub = df.filter(~F.col("topic").isin(exact_topics))  # F3 remainder
-            else:
-                sub = df.filter(F.col("topic") == m.topic)  # F3 exact
-            self._process_mapping(sub, m, epoch_id)
+        """SURVEY §3.2 as one routed pass: kafkaDF → filter tombstones →
+        tag each record with its mapping → encode → assign rolled files
+        → stage every mapping's files in one job → ingest them in one
+        pool → DLQ or raise per behavior.on.error.
 
-    def _process_mapping(
-        self, df: DataFrame, m: TopicToTableMapping, epoch_id: int
-    ) -> None:
-        fmt = m.ingest_format
-        value_type = df.schema["value"].dataType.typeName()
-        # E4 special case — pre-serialized Avro payloads: one message is a
-        # complete container file, forcing an immediate roll per record
-        # (FileWriter.java:320-323,298; the reference's B3 degenerate mode).
-        avro_bytes_mode = fmt in ("avro", "apacheavro") and value_type == "binary"
-        # B3 — flush.interval.ms == 0 rolls EVERY record into its own file
-        # regardless of format (FileWriter.java:298), not just avro-bytes.
-        per_record_roll = avro_bytes_mode or self.config.flush_interval_ms == 0
-        # E1/E3/E4 encode to one line per record, JVM-side. Dispatch mirrors
-        # FileWriter.initializeRecordWriter (F4): a struct payload is
-        # serialized per the mapping's format; a string/binary payload
-        # already IS the line (String/ByteRecordWriterProvider).
-        avro_struct_mode = fmt in ("avro", "apacheavro") and value_type == "struct"
-        parquet_struct_mode = fmt in ("parquet", "orc") and value_type == "struct"
-        avro_schema: Optional[dict] = None
-        arrow_schema = None
-        if parquet_struct_mode:
-            # Parquet/ORC staging (extension; Kusto ingests both
-            # natively): typed by the Spark struct schema so the round
-            # trip is lossless.
-            from pyspark.sql.pandas.types import to_arrow_schema
-
-            arrow_schema = to_arrow_schema(df.schema["value"].dataType)
-        if avro_struct_mode:
-            # E2 — struct payloads staged as real Avro container files
-            # (AvroRecordWriterProvider.java:27-73) via the pure-Python
-            # writer. ``line`` becomes a JSON size proxy: B1 thresholds
-            # then track serialized record size within a small constant
-            # factor of the avro bytes (documented deviation — the
-            # reference counts exact avro bytes; both bound file sizes).
-            from kafka_sink_azure_kusto_spark.functions.avro_io import avro_schema_for
-
-            avro_schema = avro_schema_for(df.schema["value"].dataType)
+        Under ``behavior_on_error=FAIL`` the whole batch's files are
+        ingested before the first failure is raised, so files of later
+        mappings may land before an earlier mapping's failure fails the
+        batch. No offsets are committed; the replay re-stages the same
+        file names, so a backend that skips replayed files (the
+        emulator's ``dedupe_replays``, ingest-by-tag on Kusto) lands
+        every record once."""
+        maps = self.config.mappings
+        df = drop_tombstones(batch_df).withColumn("route", route_index(maps))  # F1, F3
+        if not any(m.is_wildcard for m in maps):
+            df = df.filter(F.col("route").isNotNull())  # unmapped topics
+        value_type = df.schema["value"].dataType
+        routes = [self._route(m, value_type, epoch_id) for m in maps]
+        bytes_routes = [i for i, r in enumerate(routes) if r.binary]
         if "line" not in df.columns:
-            if avro_bytes_mode:
-                line = F.col("value")  # raw container bytes, untouched
-            elif avro_struct_mode or parquet_struct_mode:
-                # Size proxy AND the DLQ value for failed records —
-                # keep null fields so the DLQ payload is schema-faithful
-                # to the staged record (to_json drops nulls by default).
-                line = F.to_json(F.col("value"), {"ignoreNullFields": "false"})
-            elif value_type == "struct":
-                struct_df = df.select("value.*")
-                line = encode_for_format(
-                    df, fmt, cols=[f"value.{c}" for c in struct_df.columns]
-                )
-                if fmt == "multijson":
-                    line = F.to_json(F.col("value"))
-            else:
-                line = F.col("value").cast("string")
-            df = df.withColumn("line", line)
+            df = df.withColumn("line", self._encode(df, value_type, bool(bytes_routes)))
         # F2 — empty serializations are skipped (JsonRecordWriterProvider.java:53-56).
         df = df.filter(F.length("line") > 0)
         # B1 — size-based file assignment on UNCOMPRESSED bytes (+1 newline,
         # matching CountingOutputStream accounting, FileWriter.java:332-362).
-        # avro-bytes: threshold 1 ⇒ every record rolls its own file (E4/B3).
-        df = df.withColumn("serialized_size", F.length("line").cast("long") + F.lit(1))
-        threshold = 1 if per_record_roll else self.config.flush_size_bytes
-        df = with_file_assignment(df, threshold)
-        out_dir = os.path.join(
-            self.config.staging_dir, f"epoch={epoch_id}", m.db, m.table
-        )
-        stage_cols = ["topic", "partition", "offset", "line", "file_seq", "file_offset"]
-        if avro_struct_mode or parquet_struct_mode:
-            stage_cols.append("value")  # typed structs for the container writer
-        props = self._props_for(m)
-        ingest_spec = None
-        if self._executor_side_ingest:
-            ingest_spec = {
-                "factory": self._backend_factory,
-                "token": f"{self._instance_token}|{self.config.ingest_url}",
-                "props": props,
-                "max_attempts": self.config.max_retry_attempts,
-                "backoff_ms": self.config.retry_backoff_time_ms,
-            }
-        manifest_df = (
-            df.select(*stage_cols)
-            .groupBy("topic", "partition", "file_seq")
-            .applyInPandas(
-                _stage_writer(
-                    out_dir,
-                    fmt,
-                    binary_mode=avro_bytes_mode,
-                    avro_schema=avro_schema,
-                    arrow_schema=arrow_schema,
-                    ingest=ingest_spec,
-                ),
-                schema=_MANIFEST_SCHEMA,
+        # Text lines of a binary-valued batch count their string length.
+        size = F.length("line")
+        if isinstance(value_type, BinaryType) and len(bytes_routes) < len(routes):
+            size = _by_route(
+                [(size, bytes_routes), (F.length(F.col("line").cast("string")), [])]
             )
-        )
-        staged = [
-            StagedFile(**row.asDict()) for row in manifest_df.collect()
-        ]  # tiny: one row per rolled file
-        staged.sort(key=lambda s: (s.topic, s.partition, s.file_offset))
+        df = df.withColumn("serialized_size", size.cast("long") + F.lit(1))
+        # B3 — flush.interval.ms == 0 rolls EVERY record into its own file
+        # (FileWriter.java:298); avro-bytes always does (E4, one message is
+        # one complete container file, FileWriter.java:320-323).
+        per_record = [
+            i for i, r in enumerate(routes) if r.binary or self.config.flush_interval_ms == 0
+        ]
+        threshold = self.config.flush_size_bytes
+        if len(per_record) == len(routes):
+            threshold = 1
+        elif per_record:
+            threshold = _by_route([(F.lit(1), per_record), (F.lit(threshold), [])])
+        df = with_file_assignment(df, threshold)
+        staged = self._stage(df, routes)
         if not staged:
             return  # lazy-init parity: no empty files (FileWriter.java:185-190)
         if self._executor_side_ingest:
-            self._finish_executor_ingested(df, staged, m, avro_bytes_mode)
+            self._settle(df, [(s, None) for s in staged], routes)
             return
-        # Concurrent ingest with PER-FILE outcome tracking: successes count
-        # toward records_written even when a sibling file fails, and only
-        # the failed files' records ever reach the DLQ — a successfully
-        # delivered record must never reappear there as a duplicate.
-        from concurrent.futures import ThreadPoolExecutor
-
-        failed: list[StagedFile] = []
-        first_error: Optional[Exception] = None
-        workers = max(1, min(len(staged), self.config.ingest_threads))
         try:
-            with ThreadPoolExecutor(
-                max_workers=workers, thread_name_prefix="kusto-ingest"
-            ) as pool:
-                futures = [(pool.submit(self._ingest_with_retry, s, props), s) for s in staged]
-                for fut, s in futures:
-                    try:
-                        fut.result()
-                        self.metrics.incr("records_written", s.records)
-                    except Exception as e:  # noqa: BLE001 — R4 dispatch below
-                        self.metrics.incr("records_failed", s.records)
-                        failed.append(s)
-                        if first_error is None:
-                            first_error = e
-            if first_error is not None:
-                if self.config.behavior_on_error is BehaviorOnError.FAIL:
-                    raise first_error
-                if self.config.behavior_on_error is BehaviorOnError.LOG:
-                    log.error(
-                        "ingestion failed for %d/%d staged files of %s.%s: %s",
-                        len(failed), len(staged), m.db, m.table, first_error,
-                    )
-                self._send_to_dlq(df, failed, m, binary_values=avro_bytes_mode)
+            self._settle(df, self._ingest(staged, routes), routes)
         finally:
             for s in staged:
                 try:
@@ -509,19 +262,114 @@ class KustoSparkSink:
                 except OSError:
                     pass
 
-    def _finish_executor_ingested(
-        self,
-        df: DataFrame,
-        staged: list[StagedFile],
-        m: TopicToTableMapping,
-        binary_values: bool,
-    ) -> None:
-        """Aggregate executor-side-ingest outcomes: per-file metrics from
-        the manifest, then the same R4 behavior dispatch and per-record
-        DLQ as driver mode (files were already retried, ingested and
-        deleted where they were written)."""
-        failed = [s for s in staged if s.status != "Succeeded"]
-        for s in staged:
+    def _route(self, m: TopicToTableMapping, value_type, epoch_id: int) -> Route:
+        """A mapping's staging settings. Dispatch mirrors
+        FileWriter.initializeRecordWriter (F4): a struct payload is
+        written per the mapping's format; a string/binary payload
+        already IS the line (String/ByteRecordWriterProvider)."""
+        fmt = m.ingest_format
+        struct = isinstance(value_type, StructType)
+        avro = fmt in ("avro", "apacheavro")
+        avro_schema = arrow_schema = None
+        if avro and struct:
+            # E2 — struct payloads staged as real Avro container files
+            # (AvroRecordWriterProvider.java:27-73) via the pure-Python writer.
+            from kafka_sink_azure_kusto_spark.functions.avro_io import avro_schema_for
+
+            avro_schema = avro_schema_for(value_type)
+        if fmt in ("parquet", "orc") and struct:
+            # Parquet/ORC staging (extension; Kusto ingests both
+            # natively): typed by the Spark struct schema so the round
+            # trip is lossless.
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            arrow_schema = to_arrow_schema(value_type)
+        return Route(
+            out_dir=os.path.join(self.config.staging_dir, f"epoch={epoch_id}", m.db, m.table),
+            fmt=fmt,
+            props=self._props_for(m),
+            binary=avro and isinstance(value_type, BinaryType),
+            avro_schema=avro_schema,
+            arrow_schema=arrow_schema,
+        )
+
+    def _encode(self, df: DataFrame, value_type, any_bytes: bool) -> Column:
+        """E1/E3/E4 — one ``line`` per record, JVM-side, by route."""
+        if isinstance(value_type, BinaryType):
+            # avro-bytes keeps the raw container bytes, untouched; text
+            # routes share the same bytes (their size counts the string).
+            return F.col("value") if any_bytes else F.col("value").cast("string")
+        if not isinstance(value_type, StructType):
+            return F.col("value").cast("string")
+        fields = [f"value.{c}" for c in value_type.fieldNames()]
+
+        def line(m: TopicToTableMapping):
+            fmt = m.ingest_format
+            if fmt in ("avro", "apacheavro", "parquet", "orc"):
+                # Size proxy AND the DLQ value for failed records — keep
+                # null fields so the DLQ payload is schema-faithful to the
+                # staged record (to_json drops nulls by default). B1
+                # thresholds then track serialized record size within a
+                # small constant factor of the container bytes
+                # (documented deviation — the reference counts exact
+                # avro bytes; both bound file sizes).
+                return "json_nulls", F.to_json(F.col("value"), {"ignoreNullFields": "false"})
+            if fmt == "multijson":
+                return "json", F.to_json(F.col("value"))
+            return fmt, encode_for_format(df, fmt, cols=fields)
+
+        return _by_route(_grouped(line(m) for m in self.config.mappings))
+
+    def _stage(self, df: DataFrame, routes: list[Route]) -> list[StagedFile]:
+        """Write every route's rolled files in ONE job (``mapInArrow``
+        over rows sorted into contiguous files within each partition)
+        and collect the per-file manifest."""
+        cols = ["route", "topic", "partition", "offset", "line", "file_seq", "file_offset"]
+        if any(r.avro_schema is not None or r.arrow_schema is not None for r in routes):
+            cols.append("value")  # typed structs for the container writers
+        ingest = None
+        if self._executor_side_ingest:
+            ingest = {
+                "factory": self._backend_factory,
+                "token": f"{self._instance_token}|{self.config.ingest_url}",
+                "max_attempts": self.config.max_retry_attempts,
+                "backoff_ms": self.config.retry_backoff_time_ms,
+            }
+        manifest = (
+            df.select(*cols)
+            .sortWithinPartitions("topic", "partition", "file_seq", "offset")
+            .mapInArrow(file_writer(routes, ingest), MANIFEST_SCHEMA)
+        )
+        staged = [StagedFile(**row.asDict()) for row in manifest.collect()]
+        return sorted(staged, key=lambda s: (s.route, s.topic, s.partition, s.file_offset))
+
+    def _ingest(self, staged: list[StagedFile], routes: list[Route]):
+        """Ingest every staged file on one bounded pool, each with its
+        own route's properties; returns [(file with outcome, error)]."""
+
+        def one(s: StagedFile):
+            attempts, exc = ingest_with_retry(
+                self.backend,
+                s.path,
+                routes[s.route].props,
+                self.config.max_retry_attempts,
+                self.config.retry_backoff_time_ms,
+            )
+            return replace(s, **outcome(attempts, exc)), exc
+
+        workers = max(1, min(len(staged), self.config.ingest_threads))
+        with ThreadPoolExecutor(max_workers=workers, thread_name_prefix="kusto-ingest") as pool:
+            return list(pool.map(one, staged))
+
+    def _settle(self, df: DataFrame, outcomes, routes: list[Route]) -> None:
+        """Per-file outcome accounting: successes count toward
+        records_written even when a sibling file fails, and only the
+        failed files' records ever reach the DLQ — a delivered record
+        must never reappear there as a duplicate. Then the R4
+        behavior.on.error dispatch."""
+        failed: list[StagedFile] = []
+        first_error: Optional[Exception] = None
+        for s, exc in outcomes:
             self.metrics.incr("ingestion_attempts", s.attempts)
             if s.status == "Succeeded":
                 self.metrics.incr("ingestion_successes")
@@ -529,69 +377,57 @@ class KustoSparkSink:
             else:
                 self.metrics.incr("ingestion_failures")
                 self.metrics.incr("records_failed", s.records)
+                failed.append(s)
+                first_error = first_error or exc
         if not failed:
             return
-        first_error = RuntimeError(
-            f"executor-side ingestion failed for {len(failed)}/{len(staged)} "
-            f"files of {m.db}.{m.table}; first: {failed[0].error}"
-        )
+        if first_error is None:  # executor-side: the manifest carries the error text
+            first_error = RuntimeError(
+                f"executor-side ingestion failed for {len(failed)}/{len(outcomes)} "
+                f"files; first: {failed[0].error}"
+            )
         if self.config.behavior_on_error is BehaviorOnError.FAIL:
             raise first_error
         if self.config.behavior_on_error is BehaviorOnError.LOG:
-            log.error("%s", first_error)
-        self._send_to_dlq(df, failed, m, binary_values=binary_values)
-
-    def _ingest_with_retry(self, s: StagedFile, props: IngestionProperties) -> None:
-        """R2 constant backoff + R3 permanent classification around K1/K2."""
-        from kafka_sink_azure_kusto_spark.streaming.backends import classify_ingest_error
-
-        classify = getattr(self.backend, "classify", classify_ingest_error)
-
-        def attempt():
-            result = self.backend.ingest_file(s.path, props)
-            if not result.accepted:
-                raise RuntimeError(f"ingestion final status {result.status}")
-            return result
-
-        try:
-            retry_with_backoff(
-                attempt,
-                max_attempts=self.config.max_retry_attempts,
-                backoff_ms=self.config.retry_backoff_time_ms,
-                is_permanent=classify,
-                on_attempt=lambda _: self.metrics.incr("ingestion_attempts"),
+            props = [routes[s.route].props for s in failed]
+            tables = sorted({f"{p.database}.{p.table}" for p in props})
+            log.error(
+                "ingestion failed for %d/%d staged files of %s: %s",
+                len(failed), len(outcomes), ", ".join(tables), first_error,
             )
-            self.metrics.incr("ingestion_successes")
-        except Exception:
-            self.metrics.incr("ingestion_failures")
-            raise
+        self._send_to_dlq(df, failed, routes)
 
-    def _send_to_dlq(
-        self,
-        df: DataFrame,
-        failed: Iterable[StagedFile],
-        m: TopicToTableMapping,
-        binary_values: bool = False,
-    ) -> None:
+    @staticmethod
+    def _failed_records(df: DataFrame, failed: list[StagedFile]) -> DataFrame:
+        """The batch's records of the ``failed`` files. The topic and
+        (topic, partition) predicates name only the file-assignment
+        window's partition keys, so Catalyst pushes them below the
+        window (the topic one into the source scan): the rescan reads
+        and windows only the failed files' topic-partitions, and file
+        assignment, computed per topic-partition, comes out the same."""
+
+        def key(*cols):
+            return F.concat_ws("\x1f", *[F.col(c).cast("string") for c in cols])
+
+        tps = sorted({f"{s.topic}\x1f{s.partition}" for s in failed})
+        files = [f"{s.topic}\x1f{s.partition}\x1f{s.file_offset}" for s in failed]
+        topics = F.col("topic").isin(sorted({s.topic for s in failed}))
+        return df.filter(topics & key("topic", "partition").isin(tps)).filter(
+            key("topic", "partition", "file_offset").isin(files)
+        )
+
+    def _send_to_dlq(self, df: DataFrame, failed: list[StagedFile], routes: list[Route]) -> None:
         """K3 — one DLQ record per failed record, each key carrying the
         record's OWN kafka coordinates (TopicPartitionWriter.java:210-233
         formats them per sinkRecord, not per rolled file).
 
-        Records come from the batch DataFrame filtered to the failed
-        files' (topic, partition, file_offset) groups — never from
+        Records come from :meth:`_failed_records` — never from
         re-reading staged gzip on the driver — so per-record offsets
         survive file rolling, binary Avro payloads never pass through a
         text decode (a corrupt staged file can't escalate a LOG/IGNORE
         batch into a query failure), and only failed-file records are
         collected (bounded by the failure volume, not the batch)."""
-        file_key = F.concat_ws(
-            "\x1f",
-            F.col("topic"),
-            F.col("partition").cast("string"),
-            F.col("file_offset").cast("string"),
-        )
-        wanted = [f"{s.topic}\x1f{s.partition}\x1f{s.file_offset}" for s in failed]
-        filtered = df.filter(file_key.isin(wanted))
+        filtered = self._failed_records(df, failed)
         key_col = F.concat(
             F.lit(
                 "Failed to write record to KustoDB with the following "
@@ -604,40 +440,17 @@ class KustoSparkSink:
             F.col("offset").cast("string"),
             F.lit("."),
         )
-        if self.config.dlq_executor_side and (
+        executor_side = self.config.dlq_executor_side and (
             self.config.dlq_enabled or self._dlq_partition_producer_factory
-        ):
-            # Scale path: produce from the executors (one producer per
-            # partition task) — DLQ cost scales with the cluster and the
-            # failure tail never crosses the driver. Bytes are identical
-            # to the driver path below; only the production locus moves.
-            from kafka_sink_azure_kusto_spark.streaming.dlq import (
-                executor_partition_sender,
-            )
-
-            # A custom producer factory (e.g. file-based) supplies its own
-            # destination; only then is a missing dlq topic acceptable —
-            # give it a deterministic pseudo-topic instead of None.
-            topic = self.config.dlq_topic_name or f"dlq.{m.db}.{m.table}"
-            out = filtered.select(key_col.alias("key"), F.col("line").alias("value"))
-            sent = df.sparkSession.sparkContext.accumulator(0)
-            out.foreachPartition(
-                executor_partition_sender(
-                    topic,
-                    self.config.dlq_producer_props(),
-                    self._dlq_partition_producer_factory,
-                    counter=sent,
-                )
-            )
-            # one evaluation of the failure frame; the accumulator counts
-            # records handed to producers (post-flush), not candidates
-            self.metrics.incr("dlq_records_sent", sent.value)
-            return
-        if self._dlq_writer is None:
-            # Fallback file DLQ with no custom writer: still written from
-            # the EXECUTORS (one JSONL per task under staging/_dlq) — a
-            # whole-mapping failure on a big batch must not materialize
-            # every failed record on the driver.
+        )
+        if executor_side or self._dlq_writer is None:
+            # Produce from the executors (one producer per partition task):
+            # DLQ cost scales with the cluster and the failure tail never
+            # crosses the driver. Bytes are identical to the driver path
+            # below; only the production locus moves. Without a broker or
+            # custom writer, the fallback is one JSONL per task under
+            # staging/_dlq — a whole-mapping failure on a big batch must
+            # not materialize every failed record on the driver.
             import functools
 
             from kafka_sink_azure_kusto_spark.streaming.dlq import (
@@ -645,35 +458,43 @@ class KustoSparkSink:
                 executor_partition_sender,
             )
 
-            dlq_dir = os.path.join(self.config.staging_dir, "_dlq")
-            out = filtered.select(key_col.alias("key"), F.col("line").alias("value"))
-            sent = df.sparkSession.sparkContext.accumulator(0)
-            out.foreachPartition(
-                executor_partition_sender(
-                    f"dlq.{m.db}.{m.table}",
-                    {},
-                    functools.partial(FileDlqProducer, directory=dlq_dir),
-                    counter=sent,
+            # A custom producer factory supplies its own destination; only
+            # then is a missing dlq topic acceptable — each route gets a
+            # deterministic pseudo-topic instead of None.
+            tables = [f"dlq.{r.props.database}.{r.props.table}" for r in routes]
+            if executor_side:
+                props = self.config.dlq_producer_props()
+                factory = self._dlq_partition_producer_factory
+                if self.config.dlq_topic_name:
+                    tables = [self.config.dlq_topic_name] * len(routes)
+            else:
+                props = {}
+                factory = functools.partial(
+                    FileDlqProducer, directory=os.path.join(self.config.staging_dir, "_dlq")
                 )
-            )
+            topic = _by_route(_grouped((t, F.lit(t)) for t in tables))
+            sent = df.sparkSession.sparkContext.accumulator(0)
+            filtered.select(
+                topic.alias("topic"), key_col.alias("key"), F.col("line").alias("value")
+            ).foreachPartition(executor_partition_sender(props, factory, counter=sent))
+            # one evaluation of the failure frame; the accumulator counts
+            # records handed to producers (post-flush), not candidates
             self.metrics.incr("dlq_records_sent", sent.value)
             return
         # Custom driver-side writer seam (tests, bespoke sinks): bounded
         # collect of the failure tail only.
         rows = (
-            filtered
-            .select("topic", "partition", "offset", "line")
-            .orderBy("topic", "partition", "offset")
+            filtered.orderBy("route", "topic", "partition", "offset")
+            .select("route", key_col.alias("key"), "line")
             .collect()
         )
-        records = [
-            {
-                "key": f"Failed to write record to KustoDB with the following kafka coordinates, "
-                f"topic={r['topic']}, partition={r['partition']}, offset={r['offset']}.",
-                "value": bytes(r["line"]) if binary_values else str(r["line"]),
-            }
-            for r in rows
-        ]
+
+        def value(r):
+            if routes[r["route"]].binary:
+                return bytes(r["line"])
+            return r["line"] if isinstance(r["line"], str) else bytes(r["line"]).decode("utf-8")
+
+        records = [{"key": r["key"], "value": value(r)} for r in rows]
         if not records:
             return
         self._dlq_writer(records)
