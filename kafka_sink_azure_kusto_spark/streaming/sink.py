@@ -198,9 +198,6 @@ class KustoSparkSink:
             streaming=m.streaming,
         )
 
-    def _mapped_topics(self) -> list[str]:
-        return [m.topic for m in self.config.mappings if not m.is_wildcard]
-
     # ------------------------------------------------------- the data plane
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """SURVEY §3.2 as one routed pass: kafkaDF → filter tombstones →
@@ -230,7 +227,7 @@ class KustoSparkSink:
         # matching CountingOutputStream accounting, FileWriter.java:332-362).
         # Text lines of a binary-valued batch count their string length.
         size = F.length("line")
-        if isinstance(value_type, BinaryType) and len(bytes_routes) < len(routes):
+        if 0 < len(bytes_routes) < len(routes):
             size = _by_route(
                 [(size, bytes_routes), (F.length(F.col("line").cast("string")), [])]
             )

@@ -155,6 +155,44 @@ def test_one_pass_stages_like_single_mapping_sinks(spark, tmp_path):
         assert (files, rows) == _table_contents(alone, m.table), m.format
 
 
+def test_binary_values_mix_avro_bytes_and_text_routes(spark, tmp_path):
+    # Avro-bytes rolls one file per message; a text route on the same
+    # binary column keeps its lines and its string-length flush bound.
+    rows = [
+        (bytes(f"avro-{i}", "ascii") if i % 2
+         else json.dumps({"i": i, "s": "é" * 20}, ensure_ascii=False).encode(),
+         "ab" if i % 2 else "tx", 0, i)
+        for i in range(12)
+    ]
+    df = spark.createDataFrame(rows, "value binary, topic string, partition long, offset long")
+    maps = [
+        TopicToTableMapping(topic="ab", db="db", table="bytes_t", format="avro"),
+        TopicToTableMapping(topic="*", db="db", table="text_t", format="json"),
+    ]
+
+    def staged(backend, table):
+        log = backend.ingest_log()
+        files = sorted((e["file"], e["records"]) for e in log if e["table"] == table)
+        blobs = []
+        for path in sorted(backend.table_files("db", table)):
+            with open(path, "rb") as f:
+                blobs.append(f.read())
+        return files, sorted(blobs)
+
+    together = LocalEmulatorBackend(str(tmp_path / "together"))
+    KustoSparkSink(_cfg(tmp_path, maps, flush_size_bytes=100), together).process_batch(df, 0)
+    assert len(staged(together, "bytes_t")[0]) == 6  # one file per message
+    assert sorted(json.loads(r)["i"] for r in together.table_rows("db", "text_t")) == list(
+        range(0, 12, 2)
+    )
+    for i, m in enumerate(maps):
+        alone = LocalEmulatorBackend(str(tmp_path / f"alone{i}"))
+        cfg = _cfg(tmp_path, [m], name=f"staging{i}", flush_size_bytes=100)
+        # alone, the wildcard would also take topic ab
+        KustoSparkSink(cfg, alone).process_batch(df if i == 0 else df.filter("topic != 'ab'"), 0)
+        assert staged(together, m.table) == staged(alone, m.table), m.format
+
+
 def test_file_spanning_arrow_batches_stays_one_ordered_file(spark, tmp_path):
     # Offsets arrive shuffled and the writer sees 3-row Arrow batches, so
     # every rolled file spans several batches.
