@@ -272,11 +272,11 @@ def decode_message(data: bytes, field_schema: dict) -> dict:
 # Whole-stage-codegen protobuf decode for flat scalar messages — the
 # jar-less path that keeps the converter boundary free of Python
 # (VERDICT r6 #2). Same construction discipline as
-# wire_format.message_index_struct: a BOUNDED unrolled walk where every
-# dynamic-length quantity is resolved by a CaseWhen over bytes sliced
-# out of one shared hex() region, and every step is PROJECTED ONCE as a
-# named column by the caller so field references never re-inline the
-# chain (janino 64 KB guard).
+# wire_format.message_index_struct_sql: a BOUNDED unrolled walk where
+# every dynamic-length quantity is resolved by a CaseWhen over bytes
+# sliced out of one shared hex() region, and every step is PROJECTED
+# ONCE as a named column by the caller so field references never
+# re-inline the chain (janino 64 KB guard).
 #
 # Codegen-size reality: a lone decode (attach_codegen_decode on a
 # narrow frame) whole-stage-compiles clean. When a QUERY fuses the
@@ -299,6 +299,14 @@ def decode_message(data: bytes, field_schema: dict) -> dict:
 #   power of two is exactly representable, and IEEE multiplication of
 #   representable exact products is exact (unit-tested bit-for-bit
 #   against struct.unpack across the pattern space).
+#
+# Why SQL text: every expression here is assembled as ONE SQL string in
+# pure Python and parsed with a single F.expr() per projected column.
+# Built from Column calls instead, each operation costs several py4j
+# round-trips, and the bounded walk has hundreds of operations per step
+# — about 46k py4j calls per plan build of registry_wire_decode, most
+# of its warm wall. Identifiers and string literals that come from the
+# caller go through quote_ident / quote_literal.
 
 #: field types the expression decoder supports (== decode_message's set)
 CODEGEN_TYPES = frozenset(
@@ -314,6 +322,11 @@ _NOOP_COALESCE = 1 << 30
 #: of full scan+step code compile to ~25-35 KB bytecode, comfortably
 #: under janino's 64 KB method limit with room for neighboring operators
 _STEPS_PER_SPAN = 3
+
+#: bytes scanned per protobuf walk step: the tag byte plus the longest
+#: positionally-parsed value head (10 varint bytes; fixed64 needs 8, a
+#: 2-byte length varint 2)
+_STEP_WINDOW = 11
 
 
 def codegen_stage_split(df):
@@ -335,11 +348,6 @@ def codegen_stage_split(df):
     paths, whose input carries no exploitable partitioning."""
     return df.coalesce(_NOOP_COALESCE)
 
-#: length-delimited bodies longer than 127 bytes need a multi-byte
-#: length varint — supported up to 2 bytes (≤ 16383), beyond is a
-#: schema the UDF path handles
-_MAX_LEN_BYTES = 2
-
 
 def codegen_decodable(field_schema: dict) -> bool:
     """True when the expression decoder can handle this schema: all
@@ -352,92 +360,168 @@ def codegen_decodable(field_schema: dict) -> bool:
     )
 
 
-def _codegen_step_hex(v, p):
-    """Hex string of the 11-byte window at 1-indexed body cursor ``p``
-    (tag byte + the longest positionally-parsed value head: 10 varint
-    bytes; fixed64 needs 8, a 2-byte length varint 2) — projected as
-    its OWN column so the substr+hex code is generated once per step,
-    not once per extracted byte (janino 64 KB guard, r8)."""
-    from pyspark.sql import functions as F
-
-    return F.hex(v.substr(p.cast("int"), F.lit(11)))
+# ------------------------------------------- SQL-text builders (shared)
 
 
-def _codegen_step_bytes(hx):
-    """The step window bytes as array<long> from the pre-projected hex
+def quote_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (a column named
+    ``my-value`` would otherwise parse as a subtraction)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def quote_literal(text: str) -> str:
+    """``text`` as a single-quoted SQL string literal. Backslash and
+    quote are backslash-escaped, so a quote cannot end the literal and
+    a backslash is kept as written."""
+    escaped = text.replace("\\", "\\\\").replace("'", "\\'")
+    return f"'{escaped}'"
+
+
+def _byte_sql(bts: str, i: int) -> str:
+    """Byte ``i`` of the pre-projected byte array ``bts`` (NULL past
+    the frame end) — a cheap attribute reference."""
+    return f"get({bts}, {i})"
+
+
+def _window_hex_sql(v: str, p: str, width: int) -> str:
+    """Hex string of the ``width``-byte window of column ``v`` at
+    1-indexed cursor fragment ``p``. Callers project it as its OWN
+    column so the substr+hex code is generated once per walk step, not
+    once per extracted byte (janino 64 KB guard, r8: the per-element
+    hex(substr(...)) duplication kept the fused walk over the method
+    limit even in its own stage)."""
+    return f"hex(substr({v}, CAST({p} AS INT), {width}))"
+
+
+def _window_bytes_sql(hx: str, width: int) -> str:
+    """The window bytes as array<long> from the pre-projected hex
     column ``hx`` (NULL past the frame end) — each element a cheap
     conv(substring(attr)) over the shared slice."""
-    from pyspark.sql import functions as F
+    elems = ", ".join(
+        f"CAST(conv(substring({hx}, {2 * i + 1}, 2), 16, 10) AS BIGINT)"
+        for i in range(width)
+    )
+    return f"array({elems})"
 
-    return F.array(
-        *[
-            F.conv(F.substring(hx, 2 * i + 1, 2), 16, 10).cast("long")
-            for i in range(0, 11)
-        ]
+
+def _le_bits_sql(bts: str, start: int, n: int) -> str:
+    """Little-endian ``n``-byte bit pattern from byte ``start`` of
+    ``bts`` — an OR over disjoint shifted bytes (no addition, so no
+    ANSI overflow)."""
+    acc = f"shiftleft({_byte_sql(bts, start)}, 0)"
+    for k in range(1, n):
+        acc = f"({acc} | shiftleft({_byte_sql(bts, start + k)}, {8 * k}))"
+    return acc
+
+
+def _varint_sql(bts: str, start: int) -> tuple[str, str]:
+    """Unrolled ≤10-byte varint from byte ``start`` of ``bts`` →
+    (value, byte length) SQL fragments. Each 7-bit group is included
+    while every earlier byte had its continuation bit set — a
+    branch-free OR over disjoint bit ranges that wraps exactly for a
+    10-byte two's-complement int64. The length is NULL when the frame
+    ends first or the varint runs past 10 bytes."""
+
+    def b(j: int) -> str:
+        return _byte_sql(bts, start + j)
+
+    vval = f"({b(0)} % 128)"
+    vlen_whens = [f"WHEN ({b(0)} < 128) THEN 1"]
+    cont = f"({b(0)} >= 128)"
+    for j in range(1, 10):
+        vval = (
+            f"({vval} | (CASE WHEN {cont} THEN "
+            f"shiftleft(({b(j)} % 128), {7 * j}) ELSE 0 END))"
+        )
+        vlen_whens.append(f"WHEN ({cont} AND ({b(j)} < 128)) THEN {j + 1}")
+        if j < 9:
+            cont = f"({cont} AND ({b(j)} >= 128))"
+    return vval, f"CASE {' '.join(vlen_whens)} END"
+
+
+def _ieee_double_sql(bits: str) -> str:
+    """Exact IEEE-754 binary64 from the bit-pattern fragment ``bits``
+    (a long): sign · (2^52 + mantissa) · 2^(exp−1075), subnormals as
+    mantissa · 2^-1074, exponent 2047 as ±Infinity / NaN."""
+    e = f"(shiftrightunsigned({bits}, 52) & 2047)"
+    m = f"({bits} & {(1 << 52) - 1})"
+    sign = f"(CASE WHEN ({bits} < 0) THEN -1.0D ELSE 1.0D END)"
+    return (
+        f"CASE WHEN ({e} = 2047) THEN "
+        f"(CASE WHEN ({m} = 0) THEN ({sign} * CAST('Infinity' AS DOUBLE)) "
+        f"ELSE CAST('NaN' AS DOUBLE) END) "
+        f"WHEN ({e} = 0) THEN (({sign} * CAST({m} AS DOUBLE)) * {2.0 ** -1074!r}D) "
+        f"ELSE (({sign} * CAST(({m} | {1 << 52}) AS DOUBLE)) "
+        f"* power(2.0D, CAST(({e} - 1075) AS DOUBLE))) END"
     )
 
 
-def _codegen_step_scan(bts, p, need_f64=True, need_f32=True, need_len=True):
-    """Positional value scan over the pre-projected byte array ``bts``
-    at cursor ``p`` → struct ``(vv long, vl int[, f64 long][, f32
+def _ieee_float_sql(bits: str) -> str:
+    """Exact IEEE-754 binary32 (as a double) from the low 32 bits of
+    ``bits``: the binary64 rebuild with 8-bit exponent, 23-bit mantissa
+    and bias 150."""
+    e = f"(shiftrightunsigned({bits}, 23) & 255)"
+    m = f"({bits} & {(1 << 23) - 1})"
+    sign = f"(CASE WHEN (({bits} & {1 << 31}) != 0) THEN -1.0D ELSE 1.0D END)"
+    return (
+        f"CASE WHEN ({e} = 255) THEN "
+        f"(CASE WHEN ({m} = 0) THEN ({sign} * CAST('Infinity' AS DOUBLE)) "
+        f"ELSE CAST('NaN' AS DOUBLE) END) "
+        f"WHEN ({e} = 0) THEN (({sign} * CAST({m} AS DOUBLE)) * {2.0 ** -149!r}D) "
+        f"ELSE (({sign} * CAST(({m} | {1 << 23}) AS DOUBLE)) "
+        f"* power(2.0D, CAST(({e} - 150) AS DOUBLE))) END"
+    )
+
+
+# ------------------------------------------------ protobuf walk steps
+
+
+def _codegen_step_scan_sql(
+    bts: str, p: str, need_f64=True, need_f32=True, need_len=True
+) -> str:
+    """Positional value scan over byte-array column ``bts`` at cursor
+    fragment ``p`` → struct ``(vv long, vl int[, f64 long][, f32
     long][, dl long, ds long])``: varint value/length, little-endian
     fixed64/32 bit patterns, and the length-delimited payload
-    length/start. The fixed/length members are emitted only when the
-    declared schema uses their wire types (``need_*``) — dead scan
-    members are not free, they bloat every fused processNext().
-    Projected as its OWN column per step — the step struct then touches
-    only cheap attr refs, keeping every generated consume method far
-    under janino's 64 KB (whole-stage codegen cannot split a single
-    operator's expression tree, so the splitting must happen in the
-    PLAN, one small projection per concern)."""
-    from pyspark.sql import functions as F
-
-    def b(i):  # byte i (0 = tag byte), NULL past frame end — cheap attr ref
-        return F.get(bts, i)
-
-    # varint: include each 7-bit group while every earlier byte had its
-    # continuation bit set — branch-free OR over disjoint bit ranges
-    # (wraps exactly for 10-byte two's-complement int64, no addition →
-    # no ANSI overflow)
-    vval = b(1) % 128
-    vlen = F.when(b(1) < 128, 1)
-    cont = b(1) >= 128
-    for i in range(2, 11):
-        vval = vval.bitwiseOR(
-            F.when(cont, F.shiftleft(b(i) % 128, 7 * (i - 1))).otherwise(F.lit(0))
-        )
-        vlen = vlen.when(cont & (b(i) < 128), i)
-        if i < 10:
-            cont = cont & (b(i) >= 128)
-
-    def or_all(cols):
-        acc = cols[0]
-        for c in cols[1:]:
-            acc = acc.bitwiseOR(c)
-        return acc
-
-    members = [vval.cast("long").alias("vv"), vlen.cast("int").alias("vl")]
+    length/start (length varints up to 2 bytes, i.e. ≤ 16383; longer
+    bodies are a schema the UDF path handles). The fixed/length
+    members are emitted only when the declared schema uses their wire
+    types (``need_*``) — dead scan members are not free, they bloat
+    every fused processNext(). Projected as its OWN column per step —
+    the step struct then touches only cheap attr refs, keeping every
+    generated consume method far under janino's 64 KB (whole-stage
+    codegen cannot split a single operator's expression tree, so the
+    splitting must happen in the PLAN, one small projection per
+    concern)."""
+    vval, vlen = _varint_sql(bts, 1)
+    members = [
+        f"'vv', CAST({vval} AS BIGINT)",
+        f"'vl', CAST({vlen} AS INT)",
+    ]
     if need_f64:
-        f64 = or_all([F.shiftleft(b(i), 8 * (i - 1)) for i in range(1, 9)])
-        members.append(f64.cast("long").alias("f64"))
+        members.append(f"'f64', CAST({_le_bits_sql(bts, 1, 8)} AS BIGINT)")
     if need_f32:
-        f32 = or_all([F.shiftleft(b(i), 8 * (i - 1)) for i in range(1, 5)])
-        members.append(f32.cast("long").alias("f32"))
+        members.append(f"'f32', CAST({_le_bits_sql(bts, 1, 4)} AS BIGINT)")
     if need_len:
-        llen1 = b(1) < 128
-        dlen = F.when(llen1, b(1)).when(
-            b(2) < 128, (b(1) % 128).bitwiseOR(F.shiftleft(b(2), 7))
+        b1, b2 = _byte_sql(bts, 1), _byte_sql(bts, 2)
+        llen1 = f"({b1} < 128)"
+        dlen = (
+            f"CASE WHEN {llen1} THEN {b1} "
+            f"WHEN ({b2} < 128) THEN (({b1} % 128) | shiftleft({b2}, 7)) END"
         )
-        dstart = F.when(llen1, p + 2).otherwise(p + 3)
-        members.append(dlen.cast("long").alias("dl"))
-        members.append(dstart.cast("long").alias("ds"))
-    return F.struct(*members)
+        dstart = f"CASE WHEN {llen1} THEN (({p}) + 2) ELSE (({p}) + 3) END"
+        members.append(f"'dl', CAST({dlen} AS BIGINT)")
+        members.append(f"'ds', CAST({dstart} AS BIGINT)")
+    return f"named_struct({', '.join(members)})"
 
 
-def _codegen_step(v, p, bts, scan, need_f64=True, need_f32=True, need_len=True):
-    """One bounded walk step at 1-indexed body cursor ``p`` over the
-    pre-projected byte array ``bts`` and value scan ``scan`` → struct
-    ``(fld int, wt int, ival long[, sval binary], np long)``.
+def _codegen_step_sql(
+    v: str, p: str, bts: str, scan: str,
+    need_f64=True, need_f32=True, need_len=True,
+) -> str:
+    """One bounded walk step at cursor fragment ``p`` over body column
+    ``v``, byte-array column ``bts`` and value-scan column ``scan`` →
+    struct ``(fld int, wt int, ival long[, sval binary], np long)``.
 
     ``ival`` carries the raw varint value (wt 0) or the little-endian
     fixed64/fixed32 bit pattern (wt 1/5); ``sval`` the length-delimited
@@ -452,150 +536,7 @@ def _codegen_step(v, p, bts, scan, need_f64=True, need_f32=True, need_len=True):
     duplicate occurrences this schema does not need... except later
     known fields — those decode NULL, the same conservative direction
     as the bounded index parser."""
-    from pyspark.sql import functions as F
-
-    tag = F.get(bts, 0)
-    fld = F.shiftright(tag, 3).cast("int")
-    wt = (tag % 8).cast("int")
-    vlen = scan.getField("vl")
-
-    tag_ok = tag.isNotNull() & (tag < 128)
-    wt0_ok = (wt == 0) & vlen.isNotNull()
-    ok = tag_ok & wt0_ok
-    ival = F.when(wt0_ok, scan.getField("vv"))
-    np = F.when(wt0_ok, p + 1 + vlen)
-    if need_f64:
-        ok = ok | (tag_ok & (wt == 1))
-        ival = ival.when(wt == 1, scan.getField("f64"))
-        np = np.when(wt == 1, p + 9)
-    if need_f32:
-        ok = ok | (tag_ok & (wt == 5))
-        ival = ival.when(wt == 5, scan.getField("f32"))
-        np = np.when(wt == 5, p + 5)
-    wt2_ok = None
-    if need_len:
-        dlen = scan.getField("dl")
-        dstart = scan.getField("ds")
-        # The declared slice must fit the body: substr silently returns a
-        # SHORT slice for an over-length declaration, which would decode a
-        # truncated body to a non-NULL prefix — diverging from
-        # decode_message's ProtoDecodeError→NULL-payload contract. An
-        # over-length declaration NULLs the step, starving the walk.
-        wt2_ok = (
-            (wt == 2)
-            & dlen.isNotNull()
-            & (dstart + dlen - 1 <= F.length(v))
-        )
-        ok = ok | (tag_ok & wt2_ok)
-        np = np.when(wt2_ok, dstart + dlen)
-    members = [
-        F.when(ok, fld).alias("fld"),
-        F.when(ok, wt).alias("wt"),
-        F.when(ok, ival).cast("long").alias("ival"),
-    ]
-    if need_len:
-        members.append(
-            F.when(ok & wt2_ok, v.substr(dstart.cast("int"), dlen.cast("int")))
-            .cast("binary")
-            .alias("sval")
-        )
-    members.append(F.when(ok, np).cast("long").alias("np"))
-    return F.struct(*members)
-
-
-# ---------------------------------------------------------------------------
-# SQL-text twins of the walk-step builders.
-#
-# Why they exist (r15, guide §7.3 "very large expression trees"): every
-# Column operation in classic PySpark costs several py4j round-trips
-# (reflection getattr + call), and the bounded walk builds hundreds of
-# operations per step — profiling registry_wire_decode attributed ~5 s
-# of its 7 s warm wall to DRIVER-SIDE plan construction (46k py4j calls
-# for one build; message_index_struct alone was 11k calls / 1.4 s).
-# Assembling the same expression as ONE SQL string in pure Python and
-# parsing it with a single F.expr() call removes all but one round-trip
-# per projected column. The text mirrors the Column builders
-# operation-for-operation (same operator tree after parsing — CASE WHEN
-# for when-chains, named_struct for aliased structs, left-associative
-# AND/OR/| chains), so semantics, codegen size discipline, and plan
-# shape are unchanged; the differential property suites
-# (test_wire_property / test_protobuf / test_avro_property) and the
-# DuckDB oracle gate the equivalence.
-# ---------------------------------------------------------------------------
-
-
-def _codegen_step_hex_sql(v: str, p: str) -> str:
-    """SQL text of :func:`_codegen_step_hex` over column name ``v`` and
-    cursor fragment ``p``."""
-    return f"hex(substr({v}, CAST({p} AS INT), 11))"
-
-
-def _codegen_step_bytes_sql(hx: str) -> str:
-    """SQL text of :func:`_codegen_step_bytes` over column name ``hx``."""
-    elems = ", ".join(
-        f"CAST(conv(substring({hx}, {2 * i + 1}, 2), 16, 10) AS BIGINT)"
-        for i in range(0, 11)
-    )
-    return f"array({elems})"
-
-
-def _codegen_step_scan_sql(
-    bts: str, p: str, need_f64=True, need_f32=True, need_len=True
-) -> str:
-    """SQL text of :func:`_codegen_step_scan` over byte-array column
-    name ``bts`` and cursor fragment ``p``."""
-
-    def b(i: int) -> str:
-        return f"get({bts}, {i})"
-
-    vval = f"({b(1)} % 128)"
-    vlen_whens = [f"WHEN ({b(1)} < 128) THEN 1"]
-    cont = f"({b(1)} >= 128)"
-    for i in range(2, 11):
-        vval = (
-            f"({vval} | (CASE WHEN {cont} THEN "
-            f"shiftleft(({b(i)} % 128), {7 * (i - 1)}) ELSE 0 END))"
-        )
-        vlen_whens.append(f"WHEN ({cont} AND ({b(i)} < 128)) THEN {i}")
-        if i < 10:
-            cont = f"({cont} AND ({b(i)} >= 128))"
-    vlen = f"CASE {' '.join(vlen_whens)} END"
-
-    def or_all(parts: list) -> str:
-        acc = parts[0]
-        for c in parts[1:]:
-            acc = f"({acc} | {c})"
-        return acc
-
-    members = [
-        f"'vv', CAST({vval} AS BIGINT)",
-        f"'vl', CAST({vlen} AS INT)",
-    ]
-    if need_f64:
-        f64 = or_all([f"shiftleft({b(i)}, {8 * (i - 1)})" for i in range(1, 9)])
-        members.append(f"'f64', CAST({f64} AS BIGINT)")
-    if need_f32:
-        f32 = or_all([f"shiftleft({b(i)}, {8 * (i - 1)})" for i in range(1, 5)])
-        members.append(f"'f32', CAST({f32} AS BIGINT)")
-    if need_len:
-        llen1 = f"({b(1)} < 128)"
-        dlen = (
-            f"CASE WHEN {llen1} THEN {b(1)} "
-            f"WHEN ({b(2)} < 128) THEN (({b(1)} % 128) | shiftleft({b(2)}, 7)) END"
-        )
-        dstart = f"CASE WHEN {llen1} THEN (({p}) + 2) ELSE (({p}) + 3) END"
-        members.append(f"'dl', CAST({dlen} AS BIGINT)")
-        members.append(f"'ds', CAST({dstart} AS BIGINT)")
-    return f"named_struct({', '.join(members)})"
-
-
-def _codegen_step_sql(
-    v: str, p: str, bts: str, scan: str,
-    need_f64=True, need_f32=True, need_len=True,
-) -> str:
-    """SQL text of :func:`_codegen_step` over column names ``v`` /
-    ``bts`` / ``scan`` and cursor fragment ``p``."""
-    tag = f"get({bts}, 0)"
+    tag = _byte_sql(bts, 0)
     fld = f"CAST(shiftright({tag}, 3) AS INT)"
     wt = f"CAST(({tag} % 8) AS INT)"
     vlen = f"{scan}.vl"
@@ -617,6 +558,11 @@ def _codegen_step_sql(
     if need_len:
         dlen = f"{scan}.dl"
         dstart = f"{scan}.ds"
+        # The declared slice must fit the body: substr silently returns a
+        # SHORT slice for an over-length declaration, which would decode a
+        # truncated body to a non-NULL prefix — diverging from
+        # decode_message's ProtoDecodeError→NULL-payload contract. An
+        # over-length declaration NULLs the step, starving the walk.
         wt2_ok = (
             f"((({wt} = 2) AND ({dlen} IS NOT NULL)) "
             f"AND ((({dstart} + {dlen}) - 1) <= length({v})))"
@@ -639,86 +585,6 @@ def _codegen_step_sql(
         )
     members.append(f"'np', CAST(CASE WHEN {ok} THEN {np} END AS BIGINT)")
     return f"named_struct({', '.join(members)})"
-
-
-def _ieee_double_sql(bits: str) -> str:
-    """SQL text of :func:`_ieee_double` over bit-pattern fragment
-    ``bits``."""
-    e = f"(shiftrightunsigned({bits}, 52) & 2047)"
-    m = f"({bits} & {(1 << 52) - 1})"
-    sign = f"(CASE WHEN ({bits} < 0) THEN -1.0D ELSE 1.0D END)"
-    return (
-        f"CASE WHEN ({e} = 2047) THEN "
-        f"(CASE WHEN ({m} = 0) THEN ({sign} * CAST('Infinity' AS DOUBLE)) "
-        f"ELSE CAST('NaN' AS DOUBLE) END) "
-        f"WHEN ({e} = 0) THEN (({sign} * CAST({m} AS DOUBLE)) * {2.0 ** -1074!r}D) "
-        f"ELSE (({sign} * CAST(({m} | {1 << 52}) AS DOUBLE)) "
-        f"* power(2.0D, CAST(({e} - 1075) AS DOUBLE))) END"
-    )
-
-
-def _ieee_float_sql(bits: str) -> str:
-    """SQL text of :func:`_ieee_float` over bit-pattern fragment
-    ``bits``."""
-    e = f"(shiftrightunsigned({bits}, 23) & 255)"
-    m = f"({bits} & {(1 << 23) - 1})"
-    sign = f"(CASE WHEN (({bits} & {1 << 31}) != 0) THEN -1.0D ELSE 1.0D END)"
-    return (
-        f"CASE WHEN ({e} = 255) THEN "
-        f"(CASE WHEN ({m} = 0) THEN ({sign} * CAST('Infinity' AS DOUBLE)) "
-        f"ELSE CAST('NaN' AS DOUBLE) END) "
-        f"WHEN ({e} = 0) THEN (({sign} * CAST({m} AS DOUBLE)) * {2.0 ** -149!r}D) "
-        f"ELSE (({sign} * CAST(({m} | {1 << 23}) AS DOUBLE)) "
-        f"* power(2.0D, CAST(({e} - 150) AS DOUBLE))) END"
-    )
-
-
-def _ieee_double(bits):
-    """Exact IEEE-754 binary64 from its bit pattern (a long column)."""
-    from pyspark.sql import functions as F
-
-    e = F.shiftrightunsigned(bits, 52).bitwiseAND(F.lit(0x7FF))
-    m = bits.bitwiseAND(F.lit((1 << 52) - 1))
-    sign = F.when(bits < 0, F.lit(-1.0)).otherwise(F.lit(1.0))
-    return (
-        F.when(
-            e == 0x7FF,
-            F.when(m == 0, sign * F.lit(float("inf"))).otherwise(
-                F.lit(float("nan"))
-            ),
-        )
-        .when(e == 0, sign * m.cast("double") * F.lit(2.0 ** -1074))
-        .otherwise(
-            sign
-            * m.bitwiseOR(F.lit(1 << 52)).cast("double")
-            * F.pow(F.lit(2.0), (e - 1075).cast("double"))
-        )
-    )
-
-
-def _ieee_float(bits):
-    """Exact IEEE-754 binary32 from its bit pattern (low 32 bits)."""
-    from pyspark.sql import functions as F
-
-    e = F.shiftrightunsigned(bits, 23).bitwiseAND(F.lit(0xFF))
-    m = bits.bitwiseAND(F.lit((1 << 23) - 1))
-    sign = F.when(bits.bitwiseAND(F.lit(1 << 31)) != 0, F.lit(-1.0)).otherwise(
-        F.lit(1.0)
-    )
-    return (
-        F.when(
-            e == 0xFF,
-            F.when(m == 0, sign * F.lit(float("inf"))).otherwise(
-                F.lit(float("nan"))
-            ),
-        )
-        .when(e == 0, sign * m.cast("double") * F.lit(2.0 ** -149))
-        .otherwise(
-            sign
-            * m.bitwiseOR(F.lit(1 << 23)).cast("double")
-            * F.pow(F.lit(2.0), (e - 150).cast("double"))
-        )
-    )
 
 
 #: expected wire type per supported field type
@@ -749,7 +615,7 @@ def attach_codegen_decode(
     The walk is unrolled ``n_steps`` times (default: one step per
     declared field + 2 slack for interleaved unknown fields — a body
     with more fields than steps simply leaves the tail undecoded, the
-    bounded-parser contract shared with message_index_struct). Each
+    bounded-parser contract shared with message_index_struct_sql). Each
     step is projected as its own column so the generated code stays
     linear in n_steps. Last occurrence wins on duplicate fields.
     Wrong-wire-type semantics are PER-FIELD and deliberately more
@@ -777,18 +643,13 @@ def attach_codegen_decode(
     pre = f"_pbcg_{_uuid.uuid4().hex[:8]}"
     bname = f"{pre}_body"
     df = df.withColumn(bname, body)
-    # the walk/assembly expressions are assembled as SQL TEXT and parsed
-    # with one F.expr per projected column — the Column builders above
-    # stay as the readable reference, the _sql twins are what runs (the
-    # driver-side py4j construction cost dominated this decode's wall;
-    # see the SQL-twin block)
     names = []
     for k in range(n_steps):
         p = "CAST(1 AS BIGINT)" if k == 0 else f"{names[-1]}.np"
         hxc = f"{pre}_h{k}"
-        df = df.withColumn(hxc, F.expr(_codegen_step_hex_sql(bname, p)))
+        df = df.withColumn(hxc, F.expr(_window_hex_sql(bname, p, _STEP_WINDOW)))
         bts = f"{pre}_b{k}"
-        df = df.withColumn(bts, F.expr(_codegen_step_bytes_sql(hxc)))
+        df = df.withColumn(bts, F.expr(_window_bytes_sql(hxc, _STEP_WINDOW)))
         scan = f"{pre}_v{k}"
         df = df.withColumn(
             scan,
@@ -819,8 +680,9 @@ def attach_codegen_decode(
             None,
         )
         dt = f.dataType.simpleString()
+        key = quote_literal(f.name)
         if spec is None:
-            fields.append(f"'{f.name}', CAST(NULL AS {dt})")
+            fields.append(f"{key}, CAST(NULL AS {dt})")
             continue
         num, typ = spec
         wt_want = _WIRE_TYPE_OF[typ]
@@ -843,7 +705,7 @@ def attach_codegen_decode(
             else:  # float
                 val = _ieee_float_sql(ival)
             arms.append(f"CASE WHEN {hit} THEN {val} END")
-        fields.append(f"'{f.name}', CAST(coalesce({', '.join(arms)}) AS {dt})")
+        fields.append(f"{key}, CAST(coalesce({', '.join(arms)}) AS {dt})")
     payload = (
         f"CASE WHEN {bname} IS NOT NULL "
         f"THEN named_struct({', '.join(fields)}) END"
@@ -857,9 +719,18 @@ def attach_codegen_decode(
     return df.drop(bname, *names, *aux_cols)
 
 
+# ------------------------------------------------ fixture-side encoders
+
+
 def varint_encode_sql(x: str, max_bytes: int = 5) -> str:
-    """SQL text of :func:`varint_encode_expr` over fragment ``x`` —
-    the zero-py4j construction path (see the SQL-twin block above)."""
+    """SQL text of a builtin-expression varint ENCODE of the
+    non-negative long fragment ``x`` (≤ ``max_bytes`` base-128 groups,
+    i.e. values < 2^(7·max_bytes)) → binary. The fixture-synthesis
+    counterpart of the codegen decoder: lets registry fixtures frame
+    protobuf/avro bodies with zero Python in the plan (the same role
+    unhex/lpad/hex play for the wire header in wire_frame_split).
+    Values outside the bound yield NULL — a fixture generator bug
+    should surface as missing rows, not silent truncation."""
     xc = f"CAST(({x}) AS BIGINT)"
 
     def byte_hex(b: str) -> str:
@@ -868,6 +739,9 @@ def varint_encode_sql(x: str, max_bytes: int = 5) -> str:
     def group(i: int) -> str:
         return f"(shiftrightunsigned({xc}, {7 * i}) % 128)"
 
+    # the x < 0 arm matters: for negatives `x < 128` is true, `%` yields
+    # a negative remainder, and lpad(hex(...)) truncates the 16-digit
+    # two's-complement hex — a corrupt 1-byte frame instead of NULL
     whens = [
         f"WHEN ({xc} < 0) THEN CAST(NULL AS STRING)",
         f"WHEN ({xc} < 128) THEN {byte_hex(group(0))}",
@@ -882,58 +756,8 @@ def varint_encode_sql(x: str, max_bytes: int = 5) -> str:
 
 
 def zigzag_encode_sql(x: str) -> str:
-    """SQL text of :func:`zigzag_encode_expr` over fragment ``x``."""
+    """SQL text of the zigzag mapping of the long fragment ``x`` (the
+    avro int/long and protobuf sint encoding): (x << 1) XOR (x >> 63)
+    — all bitwise, exact for the full signed range."""
     c = f"CAST(({x}) AS BIGINT)"
     return f"(shiftleft({c}, 1) ^ shiftright({c}, 63))"
-
-
-def varint_encode_expr(x, max_bytes: int = 5):
-    """Builtin-expression varint ENCODE of a non-negative long column
-    (≤ ``max_bytes`` base-128 groups, i.e. values < 2^(7·max_bytes)) →
-    binary. The fixture-synthesis counterpart of the codegen decoder:
-    lets registry fixtures frame protobuf/avro bodies with zero Python
-    in the plan (the same role unhex/lpad/hex play for the wire header
-    in wire_frame_split). Values outside the bound yield NULL — a
-    fixture generator bug should surface as missing rows, not silent
-    truncation.
-
-    Accepts a Column, or a SQL fragment string (the cheap path: the
-    whole chain is assembled as text and parsed with one F.expr call —
-    see the SQL-twin block above)."""
-    from pyspark.sql import functions as F
-
-    if isinstance(x, str):
-        return F.expr(varint_encode_sql(x, max_bytes))
-
-    def byte_hex(b):  # two-hex-digit string of a byte value column
-        return F.lpad(F.hex(b.cast("long")), 2, "0")
-
-    def group(i):  # 7-bit group i
-        return F.shiftrightunsigned(x.cast("long"), 7 * i) % 128
-
-    # the x >= 0 guard matters: for negatives `x < 128` is true, `%`
-    # yields a negative remainder, and lpad(hex(...)) truncates the
-    # 16-digit two's-complement hex — a corrupt 1-byte frame instead of
-    # the documented NULL
-    xc = x.cast("long")
-    chain = F.when(xc < 0, F.lit(None).cast("string")).when(
-        xc < 128, byte_hex(group(0))
-    )
-    for n in range(2, max_bytes + 1):
-        parts = [byte_hex(group(i) + 128) for i in range(n - 1)]
-        parts.append(byte_hex(group(n - 1)))
-        chain = chain.when(xc < (1 << (7 * n)), F.concat(*parts))
-    return F.unhex(chain)
-
-
-def zigzag_encode_expr(x):
-    """Builtin-expression zigzag mapping of a long column (the avro
-    int/long and protobuf sint encoding): (x << 1) XOR (x >> 63) —
-    all bitwise, exact for the full signed range. Accepts a Column or
-    a SQL fragment string (see varint_encode_expr)."""
-    from pyspark.sql import functions as F
-
-    if isinstance(x, str):
-        return F.expr(zigzag_encode_sql(x))
-    c = x.cast("long")
-    return F.shiftleft(c, 1).bitwiseXOR(F.shiftright(c, 63))

@@ -344,6 +344,39 @@ def test_avro_codegen_nulls_overlength_slice(spark):
     assert rows[1]["payload"]["l"] is None  # starved walk
 
 
+def test_avro_codegen_quotes_field_names(spark):
+    """An output field name is a string literal inside named_struct:
+    a quote or backslash in it must be escaped, not end the literal."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from kafka_sink_azure_kusto_spark.functions.avro_io import (
+        attach_avro_codegen_decode,
+        encode_record,
+    )
+
+    schema = {
+        "type": "record",
+        "name": "T",
+        "fields": [
+            {"name": "it's", "type": "long"},
+            {"name": "back\\slash", "type": "string"},
+        ],
+    }
+    out_schema = StructType(
+        [
+            StructField("it's", LongType()),
+            StructField("back\\slash", StringType()),
+            StructField("absent's", LongType()),
+        ]
+    )
+    body = encode_record(schema, {"it's": -3, "back\\slash": "q"})
+    df = spark.createDataFrame([(body,)], "value binary")
+    out = attach_avro_codegen_decode(df, "value", schema, out_schema)
+    assert out.schema["payload"].dataType == out_schema
+    got = out.select("payload").collect()[0]["payload"].asDict()
+    assert got == {"it's": -3, "back\\slash": "q", "absent's": None}
+
+
 def test_decode_record_truncated_variable_width_raises():
     """ADVICE r10 #3: truncated string/bytes values must raise EOFError
     (the loud-reject contract the fixed-width float/double fix set),

@@ -402,33 +402,49 @@ def test_codegen_decode_matches_python_codec(spark):
 
 
 def test_ieee_reconstruction_bit_exact(spark):
-    """The arithmetic IEEE-754 rebuild must be BIT-exact (not just
-    close): pattern-space sweep over sign/exponent/mantissa corners,
-    compared to struct.unpack."""
+    """The arithmetic IEEE-754 rebuilds must be BIT-exact (not just
+    close): pattern-space sweeps over sign/exponent/mantissa corners of
+    binary64 and binary32, compared to struct.unpack."""
+    import math
     import struct as _struct
 
     from pyspark.sql import functions as F
 
-    from kafka_sink_azure_kusto_spark.functions.protobuf_io import _ieee_double
+    from kafka_sink_azure_kusto_spark.functions.protobuf_io import (
+        _ieee_double_sql,
+        _ieee_float_sql,
+    )
 
-    bit_patterns = []
-    for sign in (0, 1):
-        for e in (0, 1, 2, 1022, 1023, 1024, 2045, 2046, 2047):
-            for m in (0, 1, 0x8000000000000, 0xFFFFFFFFFFFFF, 0x5DEECE66D):
-                bit_patterns.append((sign << 63) | (e << 52) | m)
-    rows = [(p - (1 << 64) if p >= (1 << 63) else p,) for p in bit_patterns]
-    df = spark.createDataFrame(rows, "bits long")
-    got = [r[0] for r in df.select(_ieee_double(F.col("bits"))).collect()]
-    import math
-
-    for p, g in zip(bit_patterns, got):
-        expect = _struct.unpack("<d", p.to_bytes(8, "little"))[0]
-        if math.isnan(expect):
-            assert math.isnan(g), hex(p)
-        else:
-            assert _struct.pack("<d", g) == _struct.pack("<d", expect), (
-                hex(p), g, expect
-            )
+    doubles = [
+        (sign << 63) | (e << 52) | m
+        for sign in (0, 1)
+        for e in (0, 1, 2, 1022, 1023, 1024, 2045, 2046, 2047)
+        for m in (0, 1, 0x8000000000000, 0xFFFFFFFFFFFFF, 0x5DEECE66D)
+    ]
+    floats = [
+        (sign << 31) | (e << 23) | m
+        for sign in (0, 1)
+        for e in (0, 1, 2, 126, 127, 128, 253, 254, 255)
+        for m in (0, 1, 0x400000, 0x7FFFFF, 0x2AAAAA)
+    ]
+    sweeps = [
+        (_ieee_double_sql, doubles, 8, "<d"),
+        (_ieee_float_sql, floats, 4, "<f"),
+    ]
+    for build, bit_patterns, width, fmt in sweeps:
+        # binary64 patterns arrive as signed longs, binary32 ones in the
+        # low 32 bits of a non-negative long (the walk's f64/f32 scans)
+        rows = [(p - (1 << 64) if p >= (1 << 63) else p,) for p in bit_patterns]
+        df = spark.createDataFrame(rows, "bits long")
+        got = [r[0] for r in df.select(F.expr(build("bits"))).collect()]
+        for p, g in zip(bit_patterns, got):
+            expect = _struct.unpack(fmt, p.to_bytes(width, "little"))[0]
+            if math.isnan(expect):
+                assert math.isnan(g), (fmt, hex(p))
+            else:
+                assert _struct.pack("<d", g) == _struct.pack("<d", expect), (
+                    fmt, hex(p), g, expect
+                )
 
 
 def test_codegen_decode_nulls_overlength_slice(spark):
@@ -477,14 +493,14 @@ def test_varint_encode_expr_negative_yields_null(spark):
     from pyspark.sql import functions as F
 
     from kafka_sink_azure_kusto_spark.functions.protobuf_io import (
-        varint_encode_expr,
+        varint_encode_sql,
     )
 
     df = spark.createDataFrame(
         [(-1,), (-5,), (0,), (127,), (128,), (2**34,), (2**35,)], "x long"
     )
     got = df.select(
-        varint_encode_expr(F.col("x")).alias("v")
+        F.expr(varint_encode_sql("x")).alias("v")
     ).collect()
     assert got[0]["v"] is None and got[1]["v"] is None
     assert bytes(got[2]["v"]) == b"\x00"
@@ -492,3 +508,30 @@ def test_varint_encode_expr_negative_yields_null(spark):
     assert bytes(got[4]["v"]) == b"\x80\x01"
     assert got[5]["v"] is not None
     assert got[6]["v"] is None  # beyond 5-group default bound
+
+
+def test_codegen_decode_quotes_field_names(spark):
+    """An output field name is a string literal inside named_struct:
+    a quote or backslash in it must be escaped, not end the literal."""
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    from kafka_sink_azure_kusto_spark.functions.protobuf_io import (
+        attach_codegen_decode,
+        encode_message,
+    )
+
+    fs = {1: ("it's", "int64"), 2: ("back\\slash", "string")}
+    schema = StructType(
+        [
+            StructField("it's", LongType()),
+            StructField("back\\slash", StringType()),
+            StructField("absent's", LongType()),
+        ]
+    )
+    df = spark.createDataFrame(
+        [(encode_message([(1, 7), (2, "q")]),)], "value binary"
+    )
+    out = attach_codegen_decode(df, "value", fs, schema)
+    assert out.schema["payload"].dataType == schema
+    got = out.select("payload").collect()[0]["payload"].asDict()
+    assert got == {"it's": 7, "back\\slash": "q", "absent's": None}

@@ -311,3 +311,40 @@ def test_wire_frame_audit_json_only_handlers(spark):
     out = {r.row_id: r for r in wire_frame_audit(df, {1: {"fmt": "json"}}).collect()}
     assert out[0].wire_body_len == len(jbody) and out[0].wire_indexes is None
     assert out[1].wire_status == "ok" and out[1].wire_body_len == 0
+
+
+def _hyphen_frames_df(spark):
+    jbody = json.dumps({"a": 1, "b": "q"}).encode()
+    return spark.createDataFrame(
+        [(0, encode_wire_frame(1, jbody)), (1, encode_wire_frame(7, jbody))],
+        "row_id long, `my-value` binary",
+    ), jbody
+
+
+def test_wire_frame_audit_hyphenated_value_col(spark):
+    """value_col is a column NAME: one with a hyphen must not parse as a
+    subtraction in the frame-split SQL."""
+    from kafka_sink_azure_kusto_spark.functions.wire_format import wire_frame_audit
+
+    df, jbody = _hyphen_frames_df(spark)
+    out = {
+        r.row_id: r
+        for r in wire_frame_audit(
+            df, {1: {"fmt": "json"}}, value_col="my-value"
+        ).collect()
+    }
+    assert out[0].wire_status == "ok" and out[0].wire_body_len == len(jbody)
+    assert out[1].wire_status == "unknown_id" and out[1].wire_schema_id == 7
+
+
+def test_decode_wire_frames_hyphenated_value_col(spark):
+    df, _ = _hyphen_frames_df(spark)
+    out = {
+        r.row_id: r
+        for r in decode_wire_frames(
+            df, {1: {"fmt": "json"}}, SCHEMA, value_col="my-value"
+        ).collect()
+    }
+    assert out[0].wire_status == "ok"
+    assert (out[0].payload.a, out[0].payload.b) == (1, "q")
+    assert out[1].wire_status == "unknown_id" and out[1].payload is None
